@@ -81,6 +81,9 @@ object Bench {
     // a separate BenchIso cross-check. Cost: the session runs ~2× longer —
     // the price of per-query numbers that can be read as regressions
     // without a manual isolation pass.
+    // Failure causes by query name (first failing rep). They go to stderr
+    // and the detail FILE only: both stdout lines stay byte-compatible.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       def rep(): Double = {
         val t0 = System.nanoTime()
@@ -94,7 +97,10 @@ object Bench {
           try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
           catch {
             case _: graft.core.ScaleGuardRefusal => -2.0
-            case _: Throwable => -1.0
+            case e: Throwable =>
+              System.err.println(s"bench: $name failed: ${e.getClass.getName}: ${e.getMessage}")
+              if (!failed.contains(name)) failed(name) = e.getClass.getName
+              -1.0
           }
         cleanup()
         dt
@@ -142,9 +148,11 @@ object Bench {
     // c_shuffle lost). Persist the full detail to a file as the durable
     // per-query record — committed alongside the round's BENCH artifact.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
+    val failedJson = failed.map { case (n, c) => "\"" + n + "\":\"" + c + "\"" }
+      .mkString("{", ",", "}")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(detailPath),
-      (detail + "\n").getBytes("UTF-8"))
+      (detail.dropRight(1) + ",\"failed\":" + failedJson + "}\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"bench detail write failed: $e") }
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}""")
     spark.stop()

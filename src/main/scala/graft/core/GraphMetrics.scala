@@ -44,7 +44,7 @@ object GraphMetrics {
     // Repartitioned ONCE by the pivot key and persisted WITH that
     // partitioning: the wedge self-join below reads both sides
     // co-partitioned and plans ZERO exchanges (the
-    // scoreSeedPairsInBuckets discipline) — the naive form shuffles the
+    // Similarity.knnSeed discipline) — the naive form shuffles the
     // oriented edge set twice. The closing join still exchanges the
     // wedge stream on (x, y); that stream IS the algorithm's volume.
     val oriented = CacheScope.persisted(

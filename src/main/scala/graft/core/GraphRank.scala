@@ -54,7 +54,7 @@ object GraphRank {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     // The edge frame is repartitioned ONCE by src and persisted WITH
     // that partitioning (cached plans keep their outputPartitioning —
-    // the scoreSeedPairsInBuckets discipline): every round's edges⋈rank
+    // the Similarity.knnSeed discipline): every round's edges⋈rank
     // join then plans NO exchange on the edge side, and the degree
     // aggregation below is exchange-free too. Per round the only
     // m-sized shuffle left is the contribution transpose

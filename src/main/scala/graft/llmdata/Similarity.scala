@@ -52,35 +52,55 @@ object Similarity {
   def duckDot(a: String, b: String): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])), (s, v) -> s + v)"
 
-  /** Exact top-k neighbors for each query vector (queries = a filtered
-    * subset of the corpus, broadcast). Emits (query_id, rank, neighbor_id)
-    * — ids and ranks only, because rank order is ulp-stable across engines
-    * while raw doubles in the last digit may not be. */
-  def bruteForceTopK(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10): DataFrame =
-    topKFrom(withNorm(embeddings), nQueries, k)
-
-  /** Broadcast-queries × corpus-scan top-k over an already-normalized
-    * (`ed`, `nrm`) frame — shared by the full-precision and quantized
-    * brute-force tiers and the hard-negative band. `skip` drops the first
-    * `skip` ranks (0 = plain top-k); the upper bound stays a plain
-    * `rank <= hi` conjunct so `InferWindowGroupLimit` still plants the
-    * map-side partial top-k — each partition forwards ≤ hi rows per query
-    * across the rank exchange regardless of `skip`. */
-  private def topKFrom(n: DataFrame, nQueries: Int, k: Int, skip: Int = 0): DataFrame = {
-    val queries = n
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("ed").as("q"), col("nrm").as("qn"))
-    val scored = broadcast(queries)
-      .join(n.select(col("vec_id").as("nn_id"), col("ed").as("e"), col("nrm").as("en")),
-        col("query_id") =!= col("nn_id"))
-      .withColumn("cos", expr(sparkCosPre("q", "e", "qn", "en")))
-    scored
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id").orderBy(col("cos").desc, col("nn_id").asc)))
-      .filter(col("rank") <= (skip + k) && col("rank") > skip)
-      .select(col("query_id"), col("rank").cast("bigint").as("rank"), col("nn_id"))
+  /** Per-key top-k, the one rank-and-cut of every retrieval path: rows of
+    * each `key` ranked by (`score` desc, `id` asc) into column `as`, kept
+    * in (skip, hi]. The upper bound stays a plain `as <= hi` filter on the
+    * raw `row_number` so `InferWindowGroupLimit` plants the map-side
+    * Partial limit — each partition forwards ≤ hi rows per key across the
+    * rank exchange, whatever `skip` is (RetrievalPlanSpec pins the
+    * counts). */
+  private def topK(df: DataFrame, key: String, score: String, id: String, hi: Int,
+                   skip: Int = 0, as: String = "rank"): DataFrame = {
+    val ranked = df.withColumn(as, row_number().over(org.apache.spark.sql.expressions.Window
+      .partitionBy(key).orderBy(col(score).desc, col(id).asc)))
+    ranked.filter(if (skip > 0) col(as) <= hi && col(as) > skip else col(as) <= hi)
   }
+
+  /** Exact cosine of each candidate row carrying the query (`q`, `qn`) and
+    * neighbor (`e`, `en`) vectors. */
+  private def scored(cand: DataFrame): DataFrame =
+    cand.withColumn("cos", expr(sparkCosPre("q", "e", "qn", "en")))
+
+  /** The shared score → rank → cut tail: every candidate generator hands
+    * (query_id, nn_id, q, qn, e, en) rows here, so the tie-break and rank
+    * contract the DuckDB twins assume cannot fork between operators.
+    * Emits (query_id, rank, nn_id) — ids and ranks only, because rank
+    * order is ulp-stable across engines while raw doubles in the last
+    * digit may not be. */
+  private def rerank(cand: DataFrame, k: Int, skip: Int = 0): DataFrame =
+    topK(scored(cand), "query_id", "cos", "nn_id", skip + k, skip)
+      .select(col("query_id"), col("rank").cast("bigint").as("rank"), col("nn_id"))
+
+  /** Query side of a normalized frame: the first `nQueries` ids. */
+  private def queriesOf(n: DataFrame, nQueries: Int): DataFrame =
+    n.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("ed").as("q"), col("nrm").as("qn"))
+
+  /** Neighbor side of a normalized frame, plus any `keep` columns. */
+  private def neighborsOf(n: DataFrame, keep: String*): DataFrame =
+    n.select(Seq(col("vec_id").as("nn_id"), col("ed").as("e"), col("nrm").as("en")) ++
+      keep.map(col): _*)
+
+  /** Brute-force candidates: broadcast queries × one corpus scan, no
+    * shuffle before the rank. */
+  private def allPairs(n: DataFrame, nQueries: Int): DataFrame =
+    broadcast(queriesOf(n, nQueries))
+      .join(neighborsOf(n), col("query_id") =!= col("nn_id"))
+
+  /** Exact top-k neighbors for each query vector (queries = a filtered
+    * subset of the corpus, broadcast). */
+  def bruteForceTopK(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10): DataFrame =
+    rerank(allPairs(withNorm(embeddings), nQueries), k)
 
   /** Hard-negative mining for contrastive training: for each query vector,
     * the neighbors ranked (skip, skip+take] by exact cosine — close enough
@@ -94,7 +114,7 @@ object Similarity {
     * downstream negative-sampling curricula can weight by depth. */
   def hardNegatives(embeddings: DataFrame, nQueries: Int = 8,
                     skip: Int = 10, take: Int = 10): DataFrame =
-    topKFrom(withNorm(embeddings), nQueries, take, skip)
+    rerank(allPairs(withNorm(embeddings), nQueries), take, skip)
 
   /** Symmetric int8 quantization expression (per-element):
     * q = round(clamp(x·127, [-127, 127])) — shared verbatim shape with the
@@ -116,7 +136,7 @@ object Similarity {
     val n = embeddings
       .withColumn("ed", expr(QuantizeSql))
       .withColumn("nrm", expr("sqrt(array_dot(ed, ed))"))
-    topKFrom(n, nQueries, k)
+    rerank(allPairs(n, nQueries), k)
   }
 
   /** Input-row ceiling for the quadratic verification baseline
@@ -327,11 +347,9 @@ object Similarity {
   private def nearestCells(side: DataFrame, centroids: DataFrame,
                            idCol: String, keep: Int): DataFrame =
     if (keep == 1) assignArgmax(side, centroids)
-    else side.join(broadcast(centroids))
-      .withColumn("ccos", expr(sparkCosPre("ed", "ced", "nrm", "cnrm")))
-      .withColumn("__r", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy(idCol).orderBy(col("ccos").desc, col("cell").asc)))
-      .filter(col("__r") <= keep)
+    else topK(side.join(broadcast(centroids))
+        .withColumn("ccos", expr(sparkCosPre("ed", "ced", "nrm", "cnrm"))),
+        idCol, "ccos", "cell", keep, as = "__r")
       .drop("ced", "cnrm", "ccos", "__r")
 
   /** Argmax cell assignment as ONE codegen'd projection — the sf100
@@ -425,19 +443,21 @@ object Similarity {
     // tower (corpus scan per Lloyd round) would execute twice.
     val centroids = graft.core.CacheScope.persisted(
       kmeansCentroids(embeddings, nCells, kmeansIters))
-    val w = org.apache.spark.sql.expressions.Window
-    val assigned = nearestCells(n, centroids, "vec_id", 1)
-    val queries = nearestCells(n.filter(col("vec_id") < nQueries), centroids, "vec_id", nProbe)
+    ivfServe(n.filter(col("vec_id") < nQueries), centroids,
+      nearestCells(n, centroids, "vec_id", 1), k, nProbe)
+  }
+
+  /** IVF candidates → the shared tail: each normalized query keeps its
+    * `nProbe` best cells, and the probe join keys on `cell` — the
+    * partition column of a stored index, so dynamic partition pruning
+    * reads only the probed cells' directories there. */
+  private def ivfServe(queries: DataFrame, centroids: DataFrame, vectors: DataFrame,
+                       k: Int, nProbe: Int): DataFrame = {
+    val probes = nearestCells(queries, centroids, "vec_id", nProbe)
       .select(col("vec_id").as("query_id"), col("ed").as("q"), col("nrm").as("qn"), col("cell"))
-    broadcast(queries)
-      .join(assigned.select(col("vec_id").as("nn_id"), col("ed").as("e"), col("nrm").as("en"), col("cell")),
-        Seq("cell"))
-      .filter(col("query_id") =!= col("nn_id"))
-      .withColumn("cos", expr(sparkCosPre("q", "e", "qn", "en")))
-      .withColumn("rank",
-        row_number().over(w.partitionBy("query_id").orderBy(col("cos").desc, col("nn_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("bigint").as("rank"), col("nn_id"))
+    rerank(broadcast(probes)
+      .join(neighborsOf(vectors, "cell"), Seq("cell"))
+      .filter(col("query_id") =!= col("nn_id")), k)
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means-partition the
@@ -640,20 +660,8 @@ object Similarity {
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                        queries: DataFrame, k: Int = 10, nProbe: Int = 2): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-    val probes = nearestCells(withNorm(queries), centroids, "vec_id", nProbe)
-      .select(col("vec_id").as("query_id"), col("ed").as("q"), col("nrm").as("qn"), col("cell"))
-    val vectors = spark.read.parquet(s"$indexDir/vectors")
-      .select(col("vec_id").as("nn_id"), col("ed").as("e"), col("nrm").as("en"), col("cell"))
-    val w = org.apache.spark.sql.expressions.Window
-    broadcast(probes)
-      .join(vectors, Seq("cell"))
-      .filter(col("query_id") =!= col("nn_id"))
-      .withColumn("cos", expr(sparkCosPre("q", "e", "qn", "en")))
-      .withColumn("rank",
-        row_number().over(w.partitionBy("query_id").orderBy(col("cos").desc, col("nn_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("bigint").as("rank"), col("nn_id"))
+    ivfServe(withNorm(queries), spark.read.parquet(s"$indexDir/centroids"),
+      spark.read.parquet(s"$indexDir/vectors"), k, nProbe)
   }
 
   /** Plane weight (p, d) — delegates to the shared kernel
@@ -736,26 +744,33 @@ object Similarity {
   private def noEarlierSharedBand(aPre: String, bPre: String): Column =
     !expr(s"exists(zip_with($aPre, $bPre, (x, y) -> coalesce(x = y, false)), m -> m)")
 
+  /** Band values of a `planes`/`bandBits` banding over vector column `c`:
+    * band j holds the bits of planes [j·r, (j+1)·r) from the codegen'd
+    * `hyperplane_sig_at` kernel — bit-identical to the same range of the
+    * packed `hyperplane_sig` BIGINT wherever both exist, but total planes
+    * are bounded by the plane table (1024), not by 63 signature bits: the
+    * size-adaptive [[dupBanding]] needs 345 planes at 200 k vectors. The
+    * ONE band-array builder of the LSH and k-NN pipelines. */
+  private def bandArray(c: String, planes: Int, bandBits: Int): Column = {
+    require(bandBits >= 1 && bandBits <= 63, s"bandBits $bandBits out of [1, 63]")
+    require(planes % bandBits == 0, s"planes $planes not divisible by bandBits $bandBits")
+    require(planes <= graft.functions.HashKernels.MaxPlanes,
+      s"planes $planes exceeds the plane table (${graft.functions.HashKernels.MaxPlanes})")
+    expr((0 until planes / bandBits)
+      .map(j => s"hyperplane_sig_at($c, ${j * bandBits}, $bandBits)")
+      .mkString("array(", ", ", ")"))
+  }
+
   /** Normalized frame + band-bucket frame for one embedding set — the ONE
     * construction of the LSH banding pipeline (used by [[lshCandidates]],
-    * [[lshNearDupPairs]], [[lshNearDupAgainst]]). Band values are computed
-    * PER BAND via the codegen'd `hyperplane_sig_at` kernel (band c = bits
-    * of planes [c·r, (c+1)·r)) — bit-identical to extracting the same
-    * range from the packed `hyperplane_sig` BIGINT wherever both exist,
-    * but total planes (bands × bits) is bounded by the plane table
-    * (1024), not by 63 signature bits: the size-adaptive [[dupBanding]]
-    * needs 345 planes at 200 k vectors. The narrow (vec_id, __bands)
+    * [[lshNearDupPairs]], [[lshNearDupAgainst]]). The narrow (vec_id, __bands)
     * frame — 8·b bytes/row — is persisted so the signature kernel runs
     * once however many times the bands are consumed; the exploded band
     * form is deliberately NOT cached (re-running posexplode off the
-    * cached arrays beats materializing it at corpus scale). `persistNorm`
-    * additionally caches the normalized vectors when the caller
-    * re-attaches them repeatedly. */
+    * cached arrays beats materializing it at corpus scale). */
   private def normAndBands(embs: DataFrame, planes: Int, bandBits: Int,
-                           persistNorm: Boolean,
                            sigCenterDims: Int = 0, sigCenterAt: Double = 0.0): (DataFrame, DataFrame) = {
-    val n0 = withNorm(embs)
-    val n = if (persistNorm) graft.core.CacheScope.persisted(n0) else n0
+    val n = withNorm(embs)
     (n, bandsOf(n, planes, bandBits, sigCenterDims, sigCenterAt))
   }
 
@@ -766,22 +781,14 @@ object Similarity {
     * frame don't build the normalization twice. */
   private def bandsOf(n: DataFrame, planes: Int, bandBits: Int,
                       sigCenterDims: Int, sigCenterAt: Double): DataFrame = {
-    require(bandBits >= 1 && bandBits <= 63, s"bandBits $bandBits out of [1, 63]")
-    require(planes % bandBits == 0, s"planes $planes not divisible by bandBits $bandBits")
-    require(planes <= graft.functions.HashKernels.MaxPlanes,
-      s"planes $planes exceeds the plane table (${graft.functions.HashKernels.MaxPlanes})")
-    val bands = planes / bandBits
     // Center ONCE into a scratch column (not per band): at 31 bands the
     // centering lambda would otherwise be codegen'd 31×.
     val src =
       if (sigCenterDims <= 0) n.withColumn("__ced", col("ed"))
       else n.withColumn("__ced",
         expr(s"transform(ed, (x, i) -> IF(i < $sigCenterDims, x - ${sigCenterAt}D, x))"))
-    val arr = (0 until bands)
-      .map(c => s"hyperplane_sig_at(__ced, ${c * bandBits}, $bandBits)")
-      .mkString("array(", ", ", ")")
     val sig = graft.core.CacheScope.persisted(
-      src.withColumn("__bands", expr(arr)).select("vec_id", "__bands"))
+      src.withColumn("__bands", bandArray("__ced", planes, bandBits)).select("vec_id", "__bands"))
     explodeWithPrefix(sig)
   }
 
@@ -791,7 +798,7 @@ object Similarity {
   def lshCandidates(embeddings: DataFrame, nQueries: Int = 8,
                     planes: Int = LshPlanes, bandBits: Int = LshBandBits,
                     sigCenterDims: Int = 0, sigCenterAt: Double = 0.0): DataFrame = {
-    val (_, bands) = normAndBands(embeddings, planes, bandBits, persistNorm = false,
+    val (_, bands) = normAndBands(embeddings, planes, bandBits,
       sigCenterDims, sigCenterAt)
     val qBands = bands.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("band"), col("band_val"),
@@ -815,21 +822,13 @@ object Similarity {
     exactRerank(lshCandidates(embeddings, nQueries, planes, bandBits,
       sigCenterDims, sigCenterAt), withNorm(embeddings), k)
 
-  /** The exact-cosine re-rank tail shared by every (query_id, nn_id)
-    * candidate retrieval ([[lshTopK]], [[lshTopKMultiProbe]]): re-attach
-    * full vectors, score, per-query (cos desc, nn_id) rank, cut at k.
-    * ONE definition so the tie-break/rank contract the DuckDB twins
-    * assume cannot fork between operators. */
+  /** Re-attach full vectors to (query_id, nn_id) id candidates
+    * ([[lshTopK]], [[lshTopKMultiProbe]]) and hand them to the shared
+    * tail. */
   private def exactRerank(cand: DataFrame, n: DataFrame, k: Int): DataFrame =
-    cand
+    rerank(cand
       .join(n.select(col("vec_id").as("query_id"), col("ed").as("q"), col("nrm").as("qn")), "query_id")
-      .join(n.select(col("vec_id").as("nn_id"), col("ed").as("e"), col("nrm").as("en")), "nn_id")
-      .withColumn("cos", expr(sparkCosPre("q", "e", "qn", "en")))
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id").orderBy(col("cos").desc, col("nn_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("bigint").as("rank"), col("nn_id"))
+      .join(neighborsOf(n), "nn_id"), k)
 
   /** Multi-probe LSH top-k (Lv, Josephson, Wang, Charikar & Li, VLDB
     * 2007, "Multi-probe LSH") — the PROBE axis of the ANN family, beside
@@ -866,7 +865,7 @@ object Similarity {
     * query-side fan-out ×(bandBits+1), corpus side untouched). */
   def lshTopKMultiProbe(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10,
                         planes: Int = LshPlanes, bandBits: Int = LshBandBits): DataFrame = {
-    val (n, bands) = normAndBands(embeddings, planes, bandBits, persistNorm = false)
+    val (n, bands) = normAndBands(embeddings, planes, bandBits)
     val probeVals = (0 to bandBits).map {
       case 0 => col("band_val")
       case j => expr(s"band_val ^ ${1L << (j - 1)}L")
@@ -910,101 +909,6 @@ object Similarity {
           && noEarlierSharedBand("a.__pre", "b.__pre"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
 
-  /** BUCKET-LOCAL seed scoring for [[knnGraph]]: [[pairCandIds]]'s
-    * exactly-once band-bucket self-join with the exact cosine computed
-    * INSIDE the join, where the colliding vectors are already co-located
-    * — emits (src, dst, cos) in canonical (lo, hi) order directly.
-    *
-    * Why this is the 100 TB shape of graph seeding: unlike the near-dup
-    * family (whose verify emits only the rare pairs above a threshold),
-    * the graph build must SCORE every banding candidate to rank top-k,
-    * so the former join-form seed ([[seedPairsJoinForm]]) shipped the
-    * FULL candidate stream through a pair×vector-bytes re-attach
-    * exchange — measured at 2 M vectors (~2-3·10⁸ candidates by the
-    * [[knnBanding]] occupancy ladder) as a >78 GB scratch overflow, the
-    * library's one remaining single-box wall. Here the only exchange
-    * carrying vectors is the band frame itself — bands × N rows, ~16×
-    * less at 2 M × 8 bands — and the candidate pairs are born 24 B/row
-    * scored rows inside the join's output projection, never exchanged
-    * with vectors attached. The same property makes it the cluster
-    * shape: the candidate stream never exists as an exchanged dataset.
-    *
-    * Bit-identity contract (KnnSeedScoreSpec pins it): the join predicate
-    * is [[pairCandIds]]'s — same band values (the [[bandsOf]] kernel on
-    * uncentered `ed`), same exactly-once first-shared-band gate — and the
-    * cosine is [[sparkCosPre]] with the same (lo, hi) operand order as
-    * [[scoreEdges]]'s src/dst attach, so edge set AND doubles match the
-    * join form bit for bit. NULL embeddings produce no band rows in
-    * either form (null signatures are filtered by [[explodeWithPrefix]]),
-    * so the forms agree on degenerate inputs too.
-    *
-    * Returns (scored, cache): the bucket-keyed band+vector frame is
-    * persisted and returned for the caller to release once the scored
-    * frame has materialized. */
-  private[llmdata] def scoreSeedPairsInBuckets(n: DataFrame, planes: Int,
-                                               bandBits: Int): (DataFrame, DataFrame) = {
-    require(bandBits >= 1 && bandBits <= 63, s"bandBits $bandBits out of [1, 63]")
-    require(planes % bandBits == 0, s"planes $planes not divisible by bandBits $bandBits")
-    require(planes <= graft.functions.HashKernels.MaxPlanes,
-      s"planes $planes exceeds the plane table (${graft.functions.HashKernels.MaxPlanes})")
-    val bands = planes / bandBits
-    val arr = (0 until bands)
-      .map(c => s"hyperplane_sig_at(ed, ${c * bandBits}, $bandBits)")
-      .mkString("array(", ", ", ")")
-    // The exploded band+vector frame is repartitioned ONCE by the bucket
-    // key and persisted WITH that partitioning (cached plans keep their
-    // outputPartitioning): both self-join sides then read the cache
-    // co-partitioned and the join inserts ZERO further exchanges — the
-    // vectors cross exactly one shuffle, by construction, instead of
-    // relying on AQE stage reuse to dedup two identical exchanges
-    // (measured: reuse does NOT fire across the self-join's sides — the
-    // canonicalized cache scans differ — so the naive form shuffles the
-    // bands×N vector rows twice). The cache holds bands×N rows (the
-    // exchange's own volume, ~10 GB at 2 M × 8 bands, MEMORY_AND_DISK);
-    // that is the price of writing the shuffle once and reading it twice,
-    // and the caller frees it as soon as the scored frame materializes.
-    val bv = graft.core.CacheScope.persisted(
-      n.withColumn("__bands", expr(arr))
-        .select(col("vec_id"), col("ed"), col("nrm"), col("__bands"),
-          posexplode(col("__bands")))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_val"))
-        .filter(col("band_val").isNotNull)
-        .withColumn("__pre", expr("slice(__bands, 1, band)"))
-        .drop("__bands")
-        .repartition(col("band"), col("band_val")))
-    val scored = bv.as("a").join(bv.as("b"),
-        col("a.band") === col("b.band") && col("a.band_val") === col("b.band_val")
-          && col("a.vec_id") < col("b.vec_id")
-          && noEarlierSharedBand("a.__pre", "b.__pre"))
-      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-        expr(sparkCosPre("a.ed", "b.ed", "a.nrm", "b.nrm")).as("cos"))
-    (scored, bv)
-  }
-
-  /** The former JOIN-FORM seed scorer — banding candidates through
-    * [[scoreEdges]]'s two vector re-attach hash joins — the bit-identity
-    * reference for [[scoreSeedPairsInBuckets]] (KnnSeedScoreSpec compares
-    * edge sets and cosine bits) AND the seed of [[knnGraph]]'s LIGHT
-    * small-N shape ([[KnnLightMaxN]]): below the gate the bucket cache's
-    * fixed stages cost more than the re-attach they avoid. `bcast` (the
-    * light shape sets it) broadcasts the band frame's build side —
-    * at gated N the whole frame is ~1 MB, so the self-join plans with
-    * ZERO exchanges instead of two, which is most of what the small-N
-    * floor was made of (each exchange is an AQE stage-job plus a driver
-    * re-optimization round). */
-  private[llmdata] def seedPairsJoinForm(n: DataFrame, planes: Int,
-                                         bandBits: Int,
-                                         bcast: Boolean = false): DataFrame = {
-    val bands = bandsOf(n, planes, bandBits, 0, 0.0)
-    val pairs = bands.as("a")
-      .join(if (bcast) broadcast(bands.as("b")) else bands.as("b"),
-        col("a.band") === col("b.band") && col("a.band_val") === col("b.band_val")
-          && col("a.vec_id") < col("b.vec_id")
-          && noEarlierSharedBand("a.__pre", "b.__pre"))
-      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"))
-    scoreEdges(pairs, n, bcast = bcast)
-  }
-
   /** The candidate PAIRS a given banding config would verify — public so
     * banding selectivity (candidate count / N·(N−1)/2) is a measurable,
     * regression-testable quantity per config instead of a buried cost.
@@ -1012,7 +916,7 @@ object Similarity {
   def lshPairCandidates(embeddings: DataFrame,
                         planes: Int = LshPlanes, bandBits: Int = LshBandBits,
                         sigCenterDims: Int = 0, sigCenterAt: Double = 0.0): DataFrame = {
-    val (_, bands) = normAndBands(embeddings, planes, bandBits, persistNorm = false,
+    val (_, bands) = normAndBands(embeddings, planes, bandBits,
       sigCenterDims, sigCenterAt)
     pairCandIds(bands)
   }
@@ -1066,310 +970,210 @@ object Similarity {
     * sharing ≥ 1 band; neighbors-of-neighbors via a pivot self-join)
     * where Spark streams exactly-once band collisions.
     *
-    * Scale shape: seeding is BUCKET-LOCAL ([[scoreSeedPairsInBuckets]])
-    * — exactly-once band collisions scored inside the bucket self-join
-    * where the colliding vectors are co-located, so the seed's only
-    * vector-carrying exchange is bands × N rows and the Θ(N)-by-ladder
-    * candidate stream is born as 24 B/row scored pairs (the former
-    * join-form re-attach shipped candidates × vector bytes and walled
-    * this box at 2 M vectors). Each refinement round is
-    * bounded by STRUCTURE, not data: the general-neighbor frame B caps
-    * both directions at k (forward ranks + reverse edges re-capped at k
-    * per node), so the pivot self-join emits ≤ 4k² candidates per node
-    * and the round's `distinct` state is ≤ N·(2k)² edge ids — a
-    * k-budgeted bound, unlike the banding family's skew-exposed
-    * streams. Pairs are scored ONCE in canonical (lo, hi) order (cosine
-    * is symmetric bit-for-bit) and mirrored before ranking. Refinement
-    * scoring is PIVOT-LOCAL by default (the seed's bucket trick applied
-    * to NN-Descent: dst vectors ride the ≤ 2k·N neighbor frame into a
-    * pivot-co-partitioned cache, proposals are scored inline by the
-    * pivot self-join, known edges reuse their stored cosines — no pair
-    * ever crosses an exchange with a vector attached); `gridScore =
-    * true` switches both stages to the P×P grid cogroup
-    * ([[scorePairsGrid]], seed via grid-scored [[pairCandIds]] output)
-    * with [[verifyPairsGrid]]'s bit-identical-cosine contract — the
-    * network shape (pairs cross at 20 B/row) for cluster deployments to
-    * choose BY MEASUREMENT — see the design note on [[scorePairsGrid]]
-    * tying that choice to the stored-stats decision machinery.
+    * Scale shape ([[knnRanked]]): seeding is bucket-local, so the only
+    * vector-carrying exchange is bands × N rows and candidates are born
+    * as 24 B scored pairs; each refinement round is bounded by
+    * STRUCTURE, not data — forward and reverse neighbor lists are both
+    * capped at k, so the pivot self-join emits ≤ 4k² candidates per node.
     * One round is the registered default: seeds at constant occupancy
-    * already give high recall and each extra round costs a full
-    * score-and-rank pass (the WWW 2011 convergence loop is for random
-    * init, where round 1 starts from nothing). Measured across decades
-    * (r13 sweep, 1 000-node exact ground truth, isotropic fixture):
-    * round 1 buys +0.014 recall at 20 k (2.4 → 4.6 s) and +0.004 at
-    * 200 k (8.4 → 18.9 s); round 2 buys +0.004 / +0.0004 more for
-    * another ~1.5–2× wall — on isotropic data the closure has little to
-    * propagate (near-zero clustering coefficient), so rounds ≥ 2 are for
-    * CLUSTERED corpora only (where round 1 measures +0.054, see
-    * KnnGraphSpec's clustered case). Note the isotropic fixture's
-    * absolute recall FALLS with scale (0.76 at 500 → 0.11 at 20 k →
-    * 0.048 at 200 k): constant-occupancy banding holds candidate volume
-    * linear by raising band bits with log N, while the true-neighbor
-    * angle barely shrinks — the standard LSH trade, which clustered
-    * (real-corpus) neighbors at high cosine do not pay. */
+    * already give high recall, and each extra round costs a full
+    * score-and-rank pass (SCALING.md's r13 sweep: rounds ≥ 2 pay only on
+    * CLUSTERED corpora). On isotropic data absolute recall falls with
+    * scale, because constant-occupancy banding holds candidate volume
+    * linear while the true-neighbor angle barely shrinks — the standard
+    * LSH trade, which clustered (real-corpus) neighbors at high cosine do
+    * not pay. */
   def knnGraph(embeddings: DataFrame, k: Int = 5,
                planes: Int = 0, bandBits: Int = 0,
-               nHint: Long = 0L, descentRounds: Int = 1,
-               gridScore: Boolean = false): DataFrame =
+               nHint: Long = 0L, descentRounds: Int = 1): DataFrame =
     knnGraphShaped(embeddings, k, planes, bandBits, nHint, descentRounds,
-      gridScore, lightOverride = None)
+      lightOverride = None).drop("cos")
 
-  /** [[knnGraph]] keeping each edge's exact cosine — the public form of
-    * [[knnGraphRankedShaped]] for consumers that VERIFY or WEIGHT the
-    * graph's edges (the mutual-kNN chain behind every x_knn_* row). The
-    * ranking already scored every edge with the exact [[sparkCosPre]]
-    * fold in canonical (lo, hi) operand order, so downstream
-    * threshold/weight logic can reuse the stored double instead of
-    * re-attaching vectors and recomputing it — bit-identical by the same
-    * contract the stored-graph lifecycle relies on
-    * ([[buildKnnGraphIndex]] persists exactly these cosines). Emits
+  /** [[knnGraph]] keeping each edge's exact cosine, for consumers that
+    * VERIFY or WEIGHT the graph's edges (the mutual-kNN chain behind every
+    * x_knn_* row): the ranking already scored every edge with the exact
+    * [[sparkCosPre]] fold in canonical (lo, hi) operand order, so the
+    * stored double is bit-identical to a recompute — the same contract
+    * the stored graph ([[buildKnnGraphIndex]]) relies on. Emits
     * (vec_id, nn_id, cos). */
   def knnGraphWithCos(embeddings: DataFrame, k: Int = 5,
                       nHint: Long = 0L, descentRounds: Int = 1): DataFrame =
-    knnGraphRankedShaped(embeddings, k, 0, 0, nHint, descentRounds,
-      gridScore = false, lightOverride = None)
+    knnGraphShaped(embeddings, k, 0, 0, nHint, descentRounds, lightOverride = None)
       .select(col("vec_id"), col("nn_id"), col("cos"))
 
-  /** Corpus-size gate for [[knnGraph]]'s scoring machinery. At or below
-    * this many vectors the bucket-local persist-and-materialize shape's
-    * FIXED costs — the band repartition into the co-partitioned cache,
-    * one eager materialization per round, the pivot-vector cache — are
-    * ~15 tiny stages of pure scheduling floor that dwarf the work they
-    * exist to bound (measured at 2 000 vectors: 3.9 → 7.5 s in-session
-    * when the machinery landed; it pays for itself from 20 k vectors up —
-    * sf10 3.2× faster, sf100 crash → 362 s). Below the gate the operator
-    * runs LIGHT: join-form seed ([[seedPairsJoinForm]] — no band
-    * repartition into a persisted bucket cache) and join re-attach
-    * refinement scoring (no pivot-vector cache) — the pre-bucket-rework
-    * shape that measured 3.9 s at 2 000 vectors. The per-round eager
-    * materialization stays in BOTH shapes: a lazy persist does not dedup
-    * a diamond within one job, so a fully-lazy build re-runs the scoring
-    * subplan per reference (measured slower than the heavy shape it
-    * meant to trim). The light and heavy shapes are bit-identical
-    * (KnnSeedScoreSpec pins the seed pair, KnnShapeGateSpec pins
-    * whole-graph equality across the gate), so the gate moves TIME only,
-    * never answers — the stats-as-data idiom [[semDedupKnobs]] set,
-    * applied to plan shape. */
+  /** Corpus-size gate for the k-NN pipeline's machinery. At or below this
+    * many vectors the heavy shape's FIXED costs — the band repartition
+    * into a co-partitioned cache and the pivot-vector cache — are tiny
+    * stages of pure scheduling floor that dwarf the work they exist to
+    * bound, so [[knnRanked]] runs LIGHT: broadcast join-form seed and
+    * re-attach scoring, no bucket or pivot caches. The heavy shape pays
+    * for itself from 20 k vectors up (SCALING.md). Both shapes are
+    * bit-identical (KnnSeedScoreSpec pins the seed, KnnShapeGateSpec and
+    * KnnIncrSpec the whole graph), so the gate moves TIME only. */
   val KnnLightMaxN: Long = 1L << 14
 
-  /** [[knnGraph]] with the size gate overridable — `lightOverride`
-    * forces the light (`Some(true)`) or heavy (`Some(false)`) shape
-    * regardless of corpus size, so specs can pin shape equality at
-    * fixture scale. `None` = gate on `nEff` vs [[KnnLightMaxN]]; a
-    * pinned-config call without a hint (nEff = 0) takes the heavy shape
-    * — the gate never spends a count job the operator wasn't already
-    * spending. */
+  /** [[knnGraph]] as (vec_id, rank, nn_id, cos), with the size gate
+    * overridable: `lightOverride` forces the light (`Some(true)`) or heavy
+    * (`Some(false)`) shape regardless of corpus size, so specs can pin
+    * shape equality at fixture scale. `None` gates on `nEff` vs
+    * [[KnnLightMaxN]]; a pinned-config call without a hint (nEff = 0)
+    * takes the heavy shape — the gate never spends a count job the
+    * operator wasn't already spending. */
   private[llmdata] def knnGraphShaped(embeddings: DataFrame, k: Int,
                planes: Int, bandBits: Int,
                nHint: Long, descentRounds: Int,
-               gridScore: Boolean, lightOverride: Option[Boolean]): DataFrame =
-    knnGraphRankedShaped(embeddings, k, planes, bandBits, nHint, descentRounds,
-      gridScore, lightOverride).drop("cos")
-
-  /** [[knnGraphShaped]] keeping each edge's exact cosine — the form the
-    * stored-graph lifecycle needs ([[buildKnnGraphIndex]]): an append
-    * merges new candidate edges against the STORED scores, so the store
-    * must carry them (re-scoring the whole graph per append would be the
-    * rebuild the increment exists to avoid). */
-  private[llmdata] def knnGraphRankedShaped(embeddings: DataFrame, k: Int,
-               planes: Int, bandBits: Int,
-               nHint: Long, descentRounds: Int,
-               gridScore: Boolean, lightOverride: Option[Boolean]): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(descentRounds >= 0, s"descentRounds must be >= 0, got $descentRounds")
+               lightOverride: Option[Boolean]): DataFrame = {
     require((planes > 0) == (bandBits > 0),
       s"planes and bandBits pin a config together (got planes=$planes, bandBits=$bandBits); leave both 0 for size-adaptive banding")
     val n = graft.core.CacheScope.persisted(withNorm(embeddings))
     val nEff = if (nHint > 0) nHint else if (planes > 0) 0L else n.count()
     val (p, r) = if (planes > 0) (planes, bandBits) else knnBanding(nEff)
-    // Scoring shapes, all bit-identical (KnnSeedScoreSpec / KnnGridScoreSpec):
-    //  - SEED, default: bucket-local ([[scoreSeedPairsInBuckets]]) — the
-    //    cosine is computed INSIDE the band-bucket self-join where the
-    //    colliding vectors are already co-located, so the exchange is
-    //    bands × N vector rows and the candidate stream never exists as
-    //    an exchanged dataset. The former join-form seed shipped every
-    //    candidate through a pair×vector-bytes re-attach (~2-3·10⁸ pairs
-    //    at 2 M vectors = the measured >78 GB sf100 wall); it survives as
-    //    [[seedPairsJoinForm]] for the bit-identity contract spec.
-    //  - REFINEMENT: join re-attach by default — the pool is k-budgeted
-    //    (≤ N·(2k²+k) pairs), measured the single-box winner at sf10
-    //    (269 s vs the grid's 340 s before the canonical halving; the
-    //    grid's object-serialized cogroup sort spilled past this box's
-    //    ~78 GB scratch after it). `gridScore = true` switches BOTH
-    //    stages to the P×P grid ([[scorePairsGrid]]) — pairs cross the
-    //    network at 20 B/row vs pair×vector bytes, the shape for
-    //    deployments where the exchange is network-bound, chosen by
-    //    measurement, not by an in-library size switch that single-box
-    //    evidence contradicts.
-    val grid = gridScore
-    val light = lightOverride.getOrElse(!grid && nEff > 0 && nEff <= KnnLightMaxN)
-    // Cosine is symmetric (bit-identical either way: per-dim products
-    // commute, the fold order over dims is fixed), so every pair is
-    // scored ONCE in canonical (lo, hi) order and the scored frame is
-    // mirrored before ranking — the expensive vector-attached stage
-    // halves; only the cheap 3-column mirror feeds the top-k window.
-    // rankMirrored persists the scored frame (unpersisted, both union
-    // branches re-evaluate the whole scoring subplan — double the attach
-    // compute AND double the live shuffle files; measured at sf10 as a
-    // >78 GB scratch overflow), EAGERLY materializes the top-k (the
-    // count's work is the first consumption's, done once and cached),
-    // then frees the scored diamond — so per-round intermediates never
-    // outlive their round (the former lazy form leaked one
-    // MEMORY_AND_DISK scored frame per round for the session). The
-    // eager materialization holds in BOTH shapes: a lazy persist does
-    // NOT dedup a diamond within a single job (branches of one DAG can
-    // compute a cached partition before any branch has stored it), so a
-    // fully-lazy small-N build re-ran the scoring subplan per reference —
-    // measured SLOWER than the heavy shape it meant to trim (7.1 s
-    // e_knn_graph / 11.1 s x_knn_clusters at sf0.1 vs 7.0 / 9.6 heavy).
-    def rankMirrored(sc0: DataFrame): DataFrame = {
-      val sc = graft.core.CacheScope.persisted(sc0)
-      val ranked = topKEdges(
-        sc.union(sc.select(col("dst").as("src"), col("src").as("dst"), col("cos"))), k)
-      // Eager localCheckpoint in BOTH shapes — the same materialization
-      // barrier the former persist+count gave, plus lineage TRUNCATION,
-      // which is load-bearing twice over: at gated N the driver-side
-      // re-planning of the deep tree was a measured third of the wall
-      // (~2.4 s of the 5.8 s build), and with descentRounds >= 2 the
-      // plan EMBEDS the previous round ~12× per round — round 2 carried
-      // ~144 copies of the seed subtree through Catalyst and measured
-      // 657 s at sf1 where round 1 took 9.6 s, pure analysis cost (the
-      // pathology x_knn_clusters' composition already checkpoints away).
-      // The ranked graph is N·k 32-byte rows at ANY scale (~300 MB at
-      // 2 M vectors), so the checkpointed blocks are never the footprint
-      // problem the per-stage caches are. Trade: checkpoint blocks are
-      // non-recomputable — an executor loss mid-build fails the job
-      // instead of recomputing a stage; acceptable for a graph BUILD
-      // (idempotent, caller retries), and the alternative is exponential
-      // planning above one round.
-      val g = ranked.transform(graft.core.Lineage.truncate)
+    val g = knnRanked(withKnnBands(n, p, r).withColumn("__new", lit(true)), None,
+      k, descentRounds, lightOverride.getOrElse(nEff > 0 && nEff <= KnnLightMaxN))
+    // g is a checkpointed leaf, so the norm frame is no longer reachable.
+    n.unpersist(blocking = false)
+    edgesOut(g)
+  }
+
+  /** (vec_id, ed, nrm, __bands) off a normalized frame — the `corpus/`
+    * layout of a stored graph and the vector input of [[knnRanked]]. */
+  private[llmdata] def withKnnBands(n: DataFrame, planes: Int, bandBits: Int): DataFrame =
+    n.withColumn("__bands", bandArray("ed", planes, bandBits))
+      .select("vec_id", "ed", "nrm", "__bands")
+
+  private def edgesOut(g: DataFrame): DataFrame =
+    g.select(col("src").as("vec_id"), col("rank"), col("dst").as("nn_id"), col("cos"))
+
+  /** Seed candidates of [[knnRanked]]: exactly-once band collisions
+    * ([[pairCandIds]]'s first-shared-band predicate) with at least one
+    * `__new` endpoint, scored in canonical (lo, hi) order → (src, dst,
+    * cos). Returns the bucket cache to release, if the shape built one.
+    *
+    * HEAVY: the exploded band+vector frame is repartitioned ONCE by the
+    * bucket key and persisted with that partitioning, so both self-join
+    * sides read it co-partitioned and the cosine is computed INSIDE the
+    * join where the colliding vectors already meet — the vectors cross
+    * exactly one shuffle (bands × N rows) and the candidate stream never
+    * exists as an exchanged dataset with vectors attached. AQE stage
+    * reuse does not fire across the two sides of a self-join, so the
+    * unpersisted form would shuffle the vectors twice.
+    *
+    * LIGHT: a broadcast band self-join on ids, then [[scoreEdges]]'s
+    * broadcast re-attach — zero live exchanges, no cache; at gated N the
+    * candidate stream is small enough to re-attach vectors to. Same
+    * predicate and same (lo, hi) operand order, so both shapes agree bit
+    * for bit (KnnSeedScoreSpec). */
+  private[llmdata] def knnSeed(v: DataFrame, light: Boolean): (DataFrame, Option[DataFrame]) = {
+    def collide(a: DataFrame, b: DataFrame) = a.as("a").join(b.as("b"),
+      col("a.band") === col("b.band") && col("a.band_val") === col("b.band_val")
+        && col("a.vec_id") < col("b.vec_id")
+        && noEarlierSharedBand("a.__pre", "b.__pre")
+        && (col("a.__new") || col("b.__new")))
+    if (light) {
+      val bands = explodeWithPrefix(v.select("vec_id", "__new", "__bands"))
+      (scoreEdges(collide(bands, broadcast(bands))
+          .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst")),
+        v.select("vec_id", "ed", "nrm"), bcast = true), None)
+    } else {
+      val bv = graft.core.CacheScope.persisted(
+        explodeWithPrefix(v.select("vec_id", "ed", "nrm", "__new", "__bands"))
+          .repartition(col("band"), col("band_val")))
+      (collide(bv, bv).select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
+        expr(sparkCosPre("a.ed", "b.ed", "a.nrm", "b.nrm")).as("cos")), Some(bv))
+    }
+  }
+
+  /** The one k-NN graph pipeline behind [[knnGraph]],
+    * [[buildKnnGraphIndex]] and [[appendToKnnGraphIndex]]. `v` is the
+    * banded vector frame (vec_id, ed, nrm, __bands, __new); `stored` an
+    * existing ranked graph (vec_id, rank, nn_id, cos). A build is an
+    * append with no stored graph, where every vector is new and every
+    * pivot is affected. Returns the ranked graph (src, dst, cos, rank) as
+    * a checkpointed leaf.
+    *
+    *  1. Seed ([[knnSeed]]): band collisions with ≥ 1 new endpoint, so an
+    *     append never re-pairs old×old; stored edges join the pool with
+    *     their STORED cosines (the reason `edges/` carries cos).
+    *  2. Each round: the neighbor frame `b` = forward top-k ∪ reverse
+    *     edges re-capped at k (without the cap a hub's in-degree would make
+    *     its pivot fan-out data-dependent — the papers' reverse sample,
+    *     taken deterministically by the same (cos desc, id) order). With a
+    *     stored graph only pivots touched by a new pair propose: the other
+    *     neighborhoods are already the stored, refined ones.
+    *  3. Proposals are UNDIRECTED pairs (x.dst < y.dst), so each pair is
+    *     scored once in canonical order and mirrored before ranking.
+    *
+    * Cosine is symmetric bit for bit (per-dim products commute, the fold
+    * order over dims is fixed), so a known edge's stored cosine equals a
+    * rescore: the light pool rescores known edges by re-attach, the heavy
+    * pool reuses them and keeps one row per pair by max-of-group — the
+    * same rows either way. */
+  private def knnRanked(v: DataFrame, stored: Option[DataFrame], k: Int, rounds: Int,
+                        light: Boolean): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(rounds >= 0, s"descentRounds must be >= 0, got $rounds")
+    val n = v.select("vec_id", "ed", "nrm")
+    def mirror(g: DataFrame) = g.select(col("dst").as("src"), col("src").as("dst"), col("cos"))
+    // Ranks a persisted scored frame and frees it. The eager checkpoint is
+    // load-bearing: a lazy persist does not dedup a diamond within one job,
+    // and without truncation each round embeds the previous one ~12× in
+    // the plan, so planning grows exponentially with rounds. The ranked
+    // graph is N·k 32-byte rows at any scale.
+    def rank(sc: DataFrame): DataFrame = {
+      val g = topK(sc.union(mirror(sc)), "src", "cos", "dst", k)
+        .select(col("src"), col("dst"), col("cos"), col("rank").cast("bigint").as("rank"))
+        .transform(graft.core.Lineage.truncate)
       sc.unpersist(blocking = false)
       g
     }
-    var g = {
-      if (light)
-        // Join-form seed: at gated N the candidate stream is small enough
-        // to re-attach vectors to (KnnSeedScoreSpec pins it bit-identical
-        // to the bucket form), and skipping the band repartition + bucket
-        // cache saves their fixed stages. Broadcast hints (bcast) plan
-        // the self-join and both re-attaches exchange-free.
-        rankMirrored(seedPairsJoinForm(n, p, r, bcast = true))
-      else {
-        val (sc0, seedCache) =
-          if (grid) (scoreEdges(pairCandIds(bandsOf(n, p, r, 0, 0.0))
-              .select(col("id_a").as("src"), col("id_b").as("dst")), n, grid = true),
-            Option.empty[DataFrame])
-          else { val (s, c) = scoreSeedPairsInBuckets(n, p, r); (s, Some(c)) }
-        val g0 = rankMirrored(sc0)
-        // rankMirrored materialized the seed top-k, so the scorer's
-        // signature cache is no longer reachable from any live plan.
-        seedCache.foreach(_.unpersist(blocking = false))
-        g0
-      }
-    }
-    (1 to descentRounds).foreach { _ =>
-      var pivotCache: Option[DataFrame] = None
-      val bySrc = org.apache.spark.sql.expressions.Window
-        .partitionBy("src").orderBy(col("cos").desc, col("dst").asc)
-      // Reverse edges re-capped at k per node: without the cap a hub's
-      // in-degree would make its pivot fan-out data-dependent (the
-      // NN-Descent papers' reverse-sample rho*k, taken deterministically
-      // as the top-k by the same (cos desc, id) order as forward ranks).
-      val revK = g.select(col("dst").as("src"), col("src").as("dst"), col("cos"))
-        .withColumn("__rr", row_number().over(bySrc))
-        .filter(col("__rr") <= k)
-      // b keeps each edge's cos: the known edges re-enter the pool with
-      // their STORED scores (scored canonically in (lo, hi) order by the
-      // seed/previous round, so the stored double is bit-identical to a
-      // rescore) — the former shape dropped cos here and re-attached
-      // vectors to re-score every known edge. distinct over the 3-col
-      // frame equals the old 2-col distinct: a (src, dst) present from
-      // both g and revK carries the same cos.
+    val (seed, seedCache) = knnSeed(v, light)
+    val fresh = graft.core.CacheScope.persisted(seed)
+    val seeded = rank(stored.fold(fresh) { e =>
+      // Stored edges are mirrored and ranked: fold back to one canonical
+      // row per pair. Disjoint from the fresh pairs (old×old vs ≥ 1 new).
+      graft.core.CacheScope.persisted(e.select(least(col("vec_id"), col("nn_id")).as("src"),
+          greatest(col("vec_id"), col("nn_id")).as("dst"), col("cos"))
+        .distinct().union(fresh))
+    })
+    seedCache.foreach(_.unpersist(blocking = false))
+    val affected = stored.map(_ =>
+      fresh.select("src").union(fresh.select(col("dst").as("src"))).distinct())
+    val g = (1 to rounds).foldLeft(seeded) { (g, _) =>
+      val revK = topK(mirror(g), "src", "cos", "dst", k, as = "__rr")
       val b = graft.core.CacheScope.persisted(
         g.select("src", "dst", "cos").union(revK.select("src", "dst", "cos")).distinct())
-      // Candidate pairs are UNDIRECTED (each offers both endpoints a
-      // neighbor — Dong et al.'s formulation): the pivot emits each dst
-      // pair once (x.dst < y.dst, not !=), the general-neighbor frame
-      // canonicalizes, and the mirror above restores both directions at
-      // rank time. Pivot fan-out stays bounded by the DIRECTED b (both
-      // caps at k), ≤ 2k² canonical pairs per pivot node.
       val bU = b.select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"), col("cos"))
-      val pool =
-        if (grid || light) {
-          // Grid shape: propose id pairs, dedup, ship them at 20 B/row
-          // into the P×P scorer — pairs ARE the exchanged dataset here,
-          // which is the grid's whole point (network-bound clusters).
-          // The LIGHT shape shares the pool construction but scores it
-          // with the join re-attach (scoreEdges' default): at gated N the
-          // k-budgeted pool is small enough that the pivot cache's
-          // repartition + persist are pure floor, and the join form is
-          // the established bit-identity reference for the pivot-local
-          // scores (cos is a pure function of the pair, canonical (lo,
-          // hi) operand order on every path). Light broadcasts the
-          // k-budgeted (≤ 2k·N-row) build sides so the proposal
+      val pivots = affected.fold(b)(a => b.join(a, Seq("src"), "left_semi"))
+      val (pool, pivotCache) =
+        if (light) {
+          // Broadcast build sides (≤ 2k·N rows at gated N): the proposal
           // self-join and the re-attach plan exchange-free.
-          val c1 = b.as("x").join(
-              if (light) broadcast(b.as("y")) else b.as("y"),
+          val c1 = pivots.as("x").join(broadcast(pivots.as("y")),
               col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
             .select(col("x.dst").as("src"), col("y.dst").as("dst"))
-          scoreEdges(bU.select("src", "dst").union(c1).distinct(), n,
-            grid = grid, bcast = light)
+          (scoreEdges(bU.select("src", "dst").union(c1).distinct(), n, bcast = true), None)
         } else {
-          // PIVOT-LOCAL proposal scoring (the seed's bucket-local trick
-          // applied to NN-Descent): proposals are generated per pivot
-          // node, so attach the dst VECTORS to the ≤ 2k·N neighbor frame
-          // ONCE and co-partition it by pivot — the pivot self-join then
-          // plans zero live exchanges and scores each proposal inline,
-          // emitting 24 B/row (src, dst, cos) directly. The former shape
-          // shipped the ~N·2k² deduped pool through scoreEdges' two-join
-          // re-attach at pair×vector bytes — the measured exp-1.37 leg of
-          // the sf100 run (the seed's wall one decade later). Duplicate
-          // proposals (several pivots proposing the same pair, or a
-          // proposal duplicating a known edge) collapse in the 3-col
-          // distinct below: the cosine is a pure function of the pair
-          // (canonical operand order both paths), so distinct-by-pair ≡
-          // distinct-by-(pair, cos), and scoring before dedup trades a
-          // few duplicate 64-dim dot products for never exchanging a
-          // vector attached to a pair.
+          // PIVOT-LOCAL scoring: dst vectors ride the ≤ 2k·N neighbor frame
+          // once into a pivot-co-partitioned cache, and the pivot self-join
+          // scores each proposal inline — no pair ever crosses an exchange
+          // with a vector attached.
           val bv = graft.core.CacheScope.persisted(
-            b.select("src", "dst")
+            pivots.select("src", "dst")
               .join(n.select(col("vec_id").as("dst"), col("ed"), col("nrm")), "dst")
               .repartition(col("src")))
           val proposals = bv.as("x").join(bv.as("y"),
               col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
             .select(col("x.dst").as("src"), col("y.dst").as("dst"),
               expr(sparkCosPre("x.ed", "y.ed", "x.nrm", "y.nrm")).as("cos"))
-          pivotCache = Some(bv)
-          // One row per (src, dst) STRUCTURALLY (max-of-group over the
-          // pair key), not by relying on the 3-col distinct collapsing
-          // stored and inline-recomputed cosines: the bit-identity
-          // contract holds today (cos is a pure function of the pair,
-          // canonical operand order on both paths — max of identical
-          // values IS the value, so this aggregate equals the former
-          // distinct row-for-row), but a future ulp divergence on one
-          // path would have silently emitted duplicate (src, dst) rows
-          // into every affected node's top-k. Same shuffle as the
-          // distinct (keyed narrower); a divergence now surfaces as a
-          // deterministic pick, never a corrupted graph.
-          bU.union(proposals).groupBy("src", "dst").agg(max("cos").as("cos"))
+          (bU.union(proposals).groupBy("src", "dst").agg(max("cos").as("cos")), Some(bv))
         }
-      // rankMirrored materialized g2 — b/bv can be freed without their
-      // lineage (the whole previous round) ever re-running. The previous
-      // g is localCheckpointed (non-recomputable): its N·k-row blocks are
-      // left to the ContextCleaner instead of an unpersist that would
-      // only trade a WARN for a few MB.
-      val g2 = rankMirrored(pool)
-      b.unpersist(blocking = false)
-      pivotCache.foreach(_.unpersist(blocking = false))
-      g = g2
+      val g2 = rank(graft.core.CacheScope.persisted(pool))
+      (b +: pivotCache.toSeq).foreach(_.unpersist(blocking = false))
+      g2
     }
-    // The final g is materialized (eager checkpoint), so the norm frame
-    // is no longer reachable from the returned plan — free it here rather
-    // than leaking it to the session (the returned frame's own
-    // checkpointed blocks are N·k rows, reaped with the frame).
-    n.unpersist(blocking = false)
-    g.select(col("src").as("vec_id"), col("rank"), col("dst").as("nn_id"), col("cos"))
+    fresh.unpersist(blocking = false)
+    g
   }
 
   /** Build + STORE a k-NN graph index — the graph axis joining the
@@ -1378,11 +1182,10 @@ object Similarity {
     * [[buildPqIndex]], the dedup signature store): a production corpus
     * ingests continuously, and rebuilding a multi-million-node graph per
     * batch is exactly the cost an index exists to amortize. Layout:
-    *  - `corpus/` (vec_id, ed, nrm, __bands): vectors + packed band
-    *    values under the FROZEN banding config — the band signatures ARE
-    *    the seed structure ([[scoreSeedPairsInBuckets]]'s band frame is
-    *    precisely the storable artifact), so an append can propose
-    *    old×new candidates without re-signing the corpus;
+    *  - `corpus/` (vec_id, ed, nrm, __bands): vectors + band values under
+    *    the FROZEN banding config — the band signatures ARE the seed
+    *    structure, so an append can propose old×new candidates without
+    *    re-signing the corpus;
     *  - `edges/` (vec_id, rank, nn_id, cos): the ranked graph WITH exact
     *    cosines, so appends merge against stored scores instead of
     *    re-scoring every known edge;
@@ -1399,55 +1202,34 @@ object Similarity {
     val n = graft.core.CacheScope.persisted(withNorm(embeddings))
     val nEff = if (nHint > 0) nHint else n.count()
     val (p, r) = knnBanding(nEff)
-    val arr = (0 until p / r).map(c => s"hyperplane_sig_at(ed, ${c * r}, $r)")
-      .mkString("array(", ", ", ")")
-    n.withColumn("__bands", expr(arr))
-      .select("vec_id", "ed", "nrm", "__bands")
-      .write.mode("overwrite").parquet(s"$indexDir/corpus")
-    knnGraphRankedShaped(embeddings, k, p, r, nEff, descentRounds,
-        gridScore = false, lightOverride = None)
+    val corpus = graft.core.CacheScope.persisted(withKnnBands(n, p, r))
+    corpus.write.mode("overwrite").parquet(s"$indexDir/corpus")
+    edgesOut(knnRanked(corpus.withColumn("__new", lit(true)), None, k, descentRounds,
+        nEff > 0 && nEff <= KnnLightMaxN))
       .write.mode("overwrite").parquet(s"$indexDir/edges")
     Seq((p, r, k)).toDF("planes", "band_bits", "k")
       .write.mode("overwrite").parquet(s"$indexDir/meta")
-    n.unpersist(blocking = false)
+    Seq(corpus, n).foreach(_.unpersist(blocking = false))
   }
 
   /** Incremental k-NN graph maintenance (`e_knn_incr`): append a batch of
     * NEW vectors to a stored graph WITHOUT re-pairing the stored corpus
     * against itself — the increment the other index families' appends
     * already deliver ([[appendToIvfIndex]], [[appendToPqIndex]],
-    * CorpusOps' stored dedup index).
+    * CorpusOps' stored dedup index). The batch is signed under the STORED
+    * frozen config and [[knnRanked]] runs over stored ∪ new vectors with
+    * the stored edges and one NN-Descent round over affected pivots; the
+    * e_knn_incr oracle twins that dataflow CTE for CTE.
     *
-    * Deterministic dataflow (the e_knn_incr oracle twins it CTE for CTE):
-    *  1. Sign the batch under the STORED frozen config; candidates are
-    *     exactly-once band collisions with ≥ 1 NEW endpoint — old×old
-    *     never re-pairs, which is the increment's whole saving.
-    *  2. Merge: stored edges (canonical direction, STORED cosines — the
-    *     reason edges/ carries cos) ∪ the scored new candidates → each
-    *     node's top-k.
-    *  3. ONE NN-Descent round restricted to AFFECTED pivots (endpoints of
-    *     new candidate pairs): unaffected neighborhoods are already the
-    *     stored, refined ones, so re-proposing from them would re-run the
-    *     full build's round for zero recall gain.
-    *
-    * Scale shape: the band self-join is the seed's bucketized equi-join —
-    * the stored band frame crosses once at 24 B/row (no vectors), and the
-    * candidate stream is Θ(batch × occupancy × bands) — proportional to
-    * the BATCH, not the corpus (callers split giant backfills into
-    * batches, the same policy as every append family). Vector bytes
-    * attach only to the batch-bounded candidate ids and the k-budgeted
+    * Scale shape: candidates are Θ(batch × occupancy × bands) — the
+    * BATCH, not the corpus (callers split giant backfills into batches,
+    * the same policy as every append family), and vector bytes attach
+    * only to the batch-bounded candidates and the k-budgeted
     * affected-pivot pool. Append drift vs rebuild cadence stays a caller
     * policy, exactly as with IVF/PQ retraining (KnnIncrSpec pins the
-    * appended graph's recall against the full rebuild's).
-    *
-    * Small-N shape: like the build, the append gates its machinery on
-    * corpus size ([[KnnLightMaxN]], post-append count from footer stats +
-    * one batch count) — below the gate both scoring stages take the
-    * build's LIGHT form (broadcast join-form re-attach, no bucket/pivot
-    * caches), whose per-stage costs are right-sized when the whole corpus
-    * is broadcast-sized; at or above it the bucket-/pivot-local shape
-    * below is unchanged. Bit-identity across the gate is spec-pinned
-    * (KnnIncrSpec "append shapes agree bit for bit"). */
+    * appended graph's recall against the full rebuild's). The size gate
+    * ([[KnnLightMaxN]]) reads the post-append corpus size from parquet
+    * footers plus one batch count. */
   def appendToKnnGraphIndex(newVectors: DataFrame, indexDir: String): Unit =
     appendToKnnGraphIndexShaped(newVectors, indexDir, lightOverride = None)
 
@@ -1459,149 +1241,23 @@ object Similarity {
     val spark = newVectors.sparkSession
     graft.functions.VectorExprs.register(spark)
     val meta = spark.read.parquet(s"$indexDir/meta").collect()(0)
-    val p = meta.getAs[Int]("planes"); val r = meta.getAs[Int]("band_bits")
-    val k = meta.getAs[Int]("k")
-    val arr = (0 until p / r).map(c => s"hyperplane_sig_at(ed, ${c * r}, $r)")
-      .mkString("array(", ", ", ")")
-    val nw = graft.core.CacheScope.persisted(
-      withNorm(newVectors).withColumn("__bands", expr(arr))
-        .select("vec_id", "ed", "nrm", "__bands"))
-    // The gate reads the stored corpus size from parquet footers (no
-    // scan) and counts only the BATCH — which also materializes the nw
-    // cache it would fill on first use anyway.
+    val nw = graft.core.CacheScope.persisted(withKnnBands(withNorm(newVectors),
+      meta.getAs[Int]("planes"), meta.getAs[Int]("band_bits")))
+    // The batch count also materializes the nw cache it would fill on
+    // first use anyway.
     val light = lightOverride.getOrElse(
       graft.sources.ParquetMeta.footerRows(spark, s"$indexDir/corpus")
         + nw.count() <= KnnLightMaxN)
     val all = graft.core.CacheScope.persisted(
       spark.read.parquet(s"$indexDir/corpus").withColumn("__new", lit(false))
         .unionByName(nw.withColumn("__new", lit(true))))
-    val n = all.select("vec_id", "ed", "nrm")
-    // BUCKET-LOCAL candidate scoring (the [[scoreSeedPairsInBuckets]]
-    // shape, with the ≥1-new gate added): vectors ride the band frame
-    // once into a bucket-co-partitioned cache and every candidate is born
-    // a 24 B scored row inside the self-join. The join-form re-attach it
-    // replaces ships candidates × vector bytes — measured on a
-    // stress-sized batch (90% of the sf10 corpus appended at once:
-    // ~5·10⁸ exactly-once candidates), the re-attach filled 70 GB of
-    // shuffle scratch and died while the bucket-local form completes;
-    // a nominal batch never generates that volume (candidates are
-    // Θ(batch × occupancy × bands)), but append batch size is CALLER
-    // data, and the scoring shape should not have a batch-size cliff the
-    // build already solved. Exactly the wall r12 removed from the build.
-    val (scoredNew, bandCache) =
-      if (light) {
-        // LIGHT: the build's join-form seed with the ≥1-new gate — a
-        // broadcast band self-join on ids proposes the candidates, then
-        // scoreEdges' broadcast re-attach scores them; zero live
-        // exchanges, no bucket cache. Bit-identical to the bucket form
-        // (same predicate, same canonical (lo, hi) cosine).
-        val bandsAll = explodeWithPrefix(
-          all.select(col("vec_id"), col("__new"), col("__bands")))
-        val pairs = bandsAll.as("a").join(broadcast(bandsAll.as("b")),
-            col("a.band") === col("b.band") && col("a.band_val") === col("b.band_val")
-              && col("a.vec_id") < col("b.vec_id")
-              && noEarlierSharedBand("a.__pre", "b.__pre")
-              && (col("a.__new") || col("b.__new")))
-          .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"))
-        (graft.core.CacheScope.persisted(scoreEdges(pairs, n, bcast = true)),
-          Option.empty[DataFrame])
-      } else {
-        val bv = graft.core.CacheScope.persisted(
-          explodeWithPrefix(all.select(col("vec_id"), col("ed"), col("nrm"),
-              col("__new"), col("__bands")))
-            .repartition(col("band"), col("band_val")))
-        (graft.core.CacheScope.persisted(
-          bv.as("a").join(bv.as("b"),
-              col("a.band") === col("b.band") && col("a.band_val") === col("b.band_val")
-                && col("a.vec_id") < col("b.vec_id")
-                && noEarlierSharedBand("a.__pre", "b.__pre")
-                && (col("a.__new") || col("b.__new")))
-            .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-              expr(sparkCosPre("a.ed", "b.ed", "a.nrm", "b.nrm")).as("cos"))),
-          Some(bv))
-      }
-    // Stored edges are mirrored+ranked; fold back to one canonical row per
-    // pair (a pair ranked from only one side still yields its canonical
-    // row). Disjoint from scoredNew by construction (stored = old×old,
-    // scoredNew has a new endpoint), so the union needs no dedup.
-    val storedCan = spark.read.parquet(s"$indexDir/edges")
-      .select(least(col("vec_id"), col("nn_id")).as("src"),
-        greatest(col("vec_id"), col("nn_id")).as("dst"), col("cos"))
-      .distinct()
-    // Same rank helper as the build's, with the build's lineage
-    // truncation: each rank stage's output is a checkpointed leaf, so the
-    // refinement's plans (which reference the merge output many times)
-    // never re-optimize the whole append underneath them — measured on an
-    // sf1 stress append (90% of the corpus in one batch): 112 s with the
-    // persist+count form, 17 s with the checkpointed leaves, same data.
-    def rankMirroredK(sc0: DataFrame): DataFrame = {
-      val sc = graft.core.CacheScope.persisted(sc0)
-      val g = topKEdges(
-        sc.union(sc.select(col("dst").as("src"), col("src").as("dst"), col("cos"))), k)
-        .transform(graft.core.Lineage.truncate)
-      sc.unpersist(blocking = false)
-      g
-    }
-    val g1 = rankMirroredK(storedCan.union(scoredNew))
-    bandCache.foreach(_.unpersist(blocking = false))
-    val bySrc = org.apache.spark.sql.expressions.Window
-      .partitionBy("src").orderBy(col("cos").desc, col("dst").asc)
-    val revK = g1.select(col("dst").as("src"), col("src").as("dst"), col("cos"))
-      .withColumn("__rr", row_number().over(bySrc))
-      .filter(col("__rr") <= k)
-    val b = graft.core.CacheScope.persisted(
-      g1.select("src", "dst", "cos").union(revK.select("src", "dst", "cos")).distinct())
-    // Known edges re-enter the pool with their STORED cosines (canonical
-    // order — bit-identical to a rescore), exactly as in the build.
-    val bU = b.select(least(col("src"), col("dst")).as("src"),
-      greatest(col("src"), col("dst")).as("dst"), col("cos"))
-    val aff = scoredNew.select("src")
-      .union(scoredNew.select(col("dst").as("src"))).distinct()
-    val bAff = b.join(aff, Seq("src"), "left_semi")
-    // PIVOT-LOCAL proposal scoring restricted to affected pivots — the
-    // build's refinement shape: dst vectors ride the ≤ 2k·|affected|
-    // neighbor frame into a pivot-co-partitioned cache, proposals are
-    // scored inline by the pivot self-join (never exchanged with a
-    // vector attached), and the per-(src, dst) uniqueness is structural
-    // (max-of-group over the pair key, ≡ the former distinct since cos
-    // is a pure function of the pair).
-    val g2 =
-      if (light) {
-        // LIGHT: the build's light pool — id pairs from a broadcast pivot
-        // self-join, known edges re-entering as ids, one distinct, then
-        // the broadcast re-attach rescore. Rescoring a stored edge is
-        // bit-identical to reusing its stored cosine (pure function of
-        // the pair, canonical operand order, doubles round-trip parquet
-        // exactly), so this equals the heavy merge row for row.
-        val c1 = bAff.as("x").join(broadcast(bAff.as("y")),
-            col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
-          .select(col("x.dst").as("src"), col("y.dst").as("dst"))
-        rankMirroredK(scoreEdges(
-          bU.select("src", "dst").union(c1).distinct(), n, bcast = true))
-      } else {
-        val bvp = graft.core.CacheScope.persisted(
-          bAff.select("src", "dst")
-            .join(n.select(col("vec_id").as("dst"), col("ed"), col("nrm")), "dst")
-            .repartition(col("src")))
-        val proposals = bvp.as("x").join(bvp.as("y"),
-            col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
-          .select(col("x.dst").as("src"), col("y.dst").as("dst"),
-            expr(sparkCosPre("x.ed", "y.ed", "x.nrm", "y.nrm")).as("cos"))
-        val g2h = rankMirroredK(
-          bU.union(proposals).groupBy("src", "dst").agg(max("cos").as("cos")))
-        bvp.unpersist(blocking = false)
-        g2h
-      }
-    // g2 is a checkpointed LEAF (rankMirroredK), so the overwrite below
-    // has no dependency on the edges/ files it replaces — the write job
-    // reads materialized blocks (N·k ranked rows, the store's own size).
-    g2.select(col("src").as("vec_id"), col("rank"),
-        col("dst").as("nn_id"), col("cos"))
+    // The ranked graph is a checkpointed LEAF, so the overwrite below does
+    // not read the edges/ files it replaces.
+    edgesOut(knnRanked(all, Some(spark.read.parquet(s"$indexDir/edges")),
+        meta.getAs[Int]("k"), 1, light))
       .write.mode("overwrite").parquet(s"$indexDir/edges")
     nw.write.mode("append").parquet(s"$indexDir/corpus")
-    // g1/g2 are checkpointed (non-recomputable) — left to the
-    // ContextCleaner, as in the build.
-    Seq(b, scoredNew, all, nw).foreach(_.unpersist(blocking = false))
+    Seq(all, nw).foreach(_.unpersist(blocking = false))
   }
 
   /** Serve the stored k-NN graph ([[buildKnnGraphIndex]] layout) — the
@@ -1610,117 +1266,22 @@ object Similarity {
                         indexDir: String): DataFrame =
     spark.read.parquet(s"$indexDir/edges").select("vec_id", "rank", "nn_id")
 
-  /** Exact cosine over (src, dst) edge ids — the re-attach + score step
-    * shared by [[knnGraph]]'s seeding and refinement passes. `grid`
-    * switches to [[scorePairsGrid]]; both forms are bit-identical
-    * (KnnGridScoreSpec pins it on banding candidates). `bcast` (the
-    * small-N light shape) broadcasts the vector side of both re-attach
-    * joins — a physical-plan hint only, the join output is identical;
-    * never set it above [[KnnLightMaxN]] where the vector frame stops
-    * being broadcast-sized. */
+  /** Exact cosine over (src, dst) edge ids by re-attaching both
+    * endpoints' vectors — the light shape's scorer. A zero norm divides
+    * to NULL (ranks last under desc, never NaN); ids absent from `n`
+    * drop; a null or dimension-mismatched embedding keeps the pair with a
+    * NULL cosine. `bcast` broadcasts the vector side of both joins — a
+    * physical-plan hint only; never set it above [[KnnLightMaxN]], where
+    * the vector frame stops being broadcast-sized. */
   private[llmdata] def scoreEdges(edges: DataFrame, n: DataFrame,
-                         grid: Boolean = false, bcast: Boolean = false): DataFrame =
-    if (grid) scorePairsGrid(edges, n)
-    else {
-      def side(d: DataFrame) = if (bcast) broadcast(d) else d
-      edges
-        .join(side(n.select(col("vec_id").as("src"), col("ed").as("__ea"), col("nrm").as("__na"))), "src")
-        .join(side(n.select(col("vec_id").as("dst"), col("ed").as("__eb"), col("nrm").as("__nb"))), "dst")
-        .select(col("src"), col("dst"),
-          expr(sparkCosPre("__ea", "__eb", "__na", "__nb")).as("cos"))
-    }
-
-  /** Grid-blocked exact-cosine SCORING of (src, dst) edge ids — the
-    * [[verifyPairsGrid]] shape emitting the cosine instead of applying a
-    * threshold, for consumers that rank (the k-NN graph's top-k) rather
-    * than filter. Same cell scheme (pairs shuffle at ~20 B/row keyed by
-    * (src mod P)·P + dst mod P; vectors replicate P ways, never attached
-    * to a pair across an exchange), same JVM fold (dim-ascending add
-    * order — [[graft.functions.ArrayDot]]'s, so cosines are bit-identical
-    * to the join form's `array_dot`), and the same degenerate-input
-    * contract: a zero norm divides by zero, which the join form's Spark
-    * `Divide` returns as NULL — mirrored here with an Option (None → SQL
-    * NULL), so desc-ordered ranking places it last on both paths (the
-    * JVM's NaN would sort FIRST under Spark's desc, silently promoting
-    * zero-norm vectors into every top-k — do not "simplify" the Option
-    * away). Pairs referencing ids absent from `n` drop, as the join
-    * form's inner joins drop them; pairs whose id EXISTS but whose
-    * embedding is NULL or dimension-mismatched are KEPT with a NULL cos
-    * — the join form's inner joins succeed on such rows and `array_dot`
-    * returns NULL on a null or length-mismatched input, so dropping them
-    * here would be an edge-set divergence from the bit-identical
-    * contract (a null nrm rides as a 0.0 placeholder through the tuple
-    * encoder — it is only ever read when both embeddings are non-null
-    * same-length arrays, which forces nrm non-null).
-    *
-    * Design note — grid vs join as a STATS-LOOP DECISION: `gridScore`
-    * stays caller-owned because the two shapes win in different regimes
-    * and the single-box evidence is settled (join 269 s vs grid 340 s at
-    * 200 k vectors; the grid's object-serialized cogroup sort spills
-    * where the join's unsafe-row exchange doesn't). The regime where the
-    * grid wins — a network-bound cluster exchange, where shipping pairs
-    * at 20 B/row beats shipping pair×vector bytes — is exactly the kind
-    * of choice [[graft.sources.TableStats.joinStrategyChoice]] already
-    * makes from standing stats: a deployment with per-link byte costs
-    * would fold `rowCount(pairs) × vecBytes` vs `rowCount(vectors) × P ×
-    * vecBytes + 20 × rowCount(pairs)` into the same stored-stats
-    * decision frame and set `gridScore` from the estimate, the way
-    * [[graft.core.JoinPlanner.autoJoin]] turns the join-strategy
-    * decision into a plan shape. Wiring that here is deliberately NOT
-    * done: this box cannot measure the network-bound regime, and an
-    * in-library size switch would contradict the measurement we do have. */
-  private[llmdata] def scorePairsGrid(pairs: DataFrame, n: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val p = gridSide(spark)
-    val cells = pairs.select(
-        (pmod(col("src"), lit(p)) * p + pmod(col("dst"), lit(p))).cast("int").as("_1"),
-        col("src").as("_2"), col("dst").as("_3"))
-      .as[(Int, Long, Long)]
-    def replicated(aSide: Boolean) = {
-      val own = pmod(col("vec_id"), lit(p))
-      n.select(col("vec_id"), col("ed"), coalesce(col("nrm"), lit(0.0)).as("nrm"))
-        .withColumn("__o", explode(expr(s"sequence(0, ${p - 1})")))
-        .select(
-          (if (aSide) own * p + col("__o") else col("__o") * p + own).cast("int").as("_1"),
-          lit(if (aSide) 0 else 1).as("_2"),
-          col("vec_id").as("_3"), col("ed").as("_4"), col("nrm").as("_5"))
-        .as[(Int, Int, Long, Array[Double], Double)]
-    }
-    val vecs = replicated(aSide = true).unionByName(replicated(aSide = false))
-    vecs.groupByKey(_._1).cogroup(cells.groupByKey(_._1)) { (_, vit, pit) =>
-      val am = new java.util.HashMap[java.lang.Long, (Array[Double], Double)]()
-      val bm = new java.util.HashMap[java.lang.Long, (Array[Double], Double)]()
-      vit.foreach { v =>
-        if (v._2 == 0) am.put(v._3, (v._4, v._5)) else bm.put(v._3, (v._4, v._5))
-      }
-      pit.flatMap { pr =>
-        val a = am.get(pr._2); val b = bm.get(pr._3)
-        if (a == null || b == null) Iterator.empty // id absent from n: inner joins drop it
-        else if (a._1 == null || b._1 == null || a._1.length != b._1.length)
-          // Row exists but array_dot would be NULL: keep the pair, NULL cos.
-          Iterator.single((pr._2, pr._3, Option.empty[Double]))
-        else {
-          val ea = a._1; val eb = b._1
-          var s = 0.0; var i = 0
-          while (i < ea.length) { s += ea(i) * eb(i); i += 1 }
-          val denom = a._2 * b._2
-          Iterator.single((pr._2, pr._3,
-            if (denom == 0.0) Option.empty[Double] else Some(s / denom)))
-        }
-      }
-    }.toDF("src", "dst", "cos")
+                                  bcast: Boolean = false): DataFrame = {
+    def side(d: DataFrame) = if (bcast) broadcast(d) else d
+    edges
+      .join(side(n.select(col("vec_id").as("src"), col("ed").as("__ea"), col("nrm").as("__na"))), "src")
+      .join(side(n.select(col("vec_id").as("dst"), col("ed").as("__eb"), col("nrm").as("__nb"))), "dst")
+      .select(col("src"), col("dst"),
+        expr(sparkCosPre("__ea", "__eb", "__na", "__nb")).as("cos"))
   }
-
-  /** Per-src top-k of scored edges by (cos desc, dst asc) — the
-    * [[exactRerank]] rank contract on the graph's edge frame (cos kept:
-    * the refinement round reuses it for the reverse-edge cap). */
-  private def topKEdges(scored: DataFrame, k: Int): DataFrame =
-    scored.withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy("src").orderBy(col("cos").desc, col("dst").asc)))
-      .filter(col("rank") <= k)
-      .select(col("src"), col("dst"), col("cos"), col("rank").cast("bigint").as("rank"))
 
   /** LSH-bucketed near-duplicate pairs — the 100 TB replacement for
     * [[cosineNearDupPairs]]'s all-pairs product: candidates are only pairs
@@ -1836,73 +1397,6 @@ object Similarity {
   private def gridSide(spark: org.apache.spark.sql.SparkSession): Int = {
     val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     math.max(2, math.ceil(math.sqrt(parts * 2.0)).toInt)
-  }
-
-  /** [[scoringShapeChoice]]'s result: which scoring shape moves fewer
-    * exchange bytes, and the per-shape estimates the choice folded. */
-  final case class ScoringShape(choice: String, joinBytes: Long, gridBytes: Long,
-                                seedCandidates: Long, poolPairs: Long)
-
-  /** Stats-driven scoring-shape RECOMMENDATION for [[knnGraph]] — the
-    * design note on [[scorePairsGrid]] executed as a helper: fold a
-    * stored row count into both shapes' estimated exchange volumes and
-    * report which moves fewer bytes. PURE integer arithmetic off
-    * metadata (the [[graft.sources.TableStats.joinStrategyChoice]]
-    * idiom), so the recommendation is auditable and spec-pinned
-    * (ScoringShapeSpec) — no corpus is touched.
-    *
-    * Exchange-byte model (the quantity that walls single boxes and
-    * saturates cluster links; candidate counts from the [[knnBanding]]
-    * occupancy ladder, pool pairs from the NN-Descent k-budget):
-    *  - DEFAULT join shape (bucket-local seed + pivot-local refinement):
-    *    vectors cross attached to STRUCTURE, never to pairs —
-    *    `bands·N·vecBytes` (the co-partitioned band frame) +
-    *    `2k·N·vecBytes` (the pivot frame) + 24 B per scored pair.
-    *  - GRID: vectors replicate P ways per scoring stage
-    *    (`2·P·N·vecBytes`), the band frame crosses WITHOUT vectors
-    *    (~48 B/row with the exactly-once prefix), and every pair crosses
-    *    at 20 B.
-    *
-    * The registered default does NOT auto-switch on this output: the
-    * single-box measurement stands (join 269 s vs grid 340 s at 200 k —
-    * the grid's object-serialized cogroup sort spills where the join's
-    * unsafe-row exchange doesn't), and indeed at the in-engine grid side
-    * P = [[gridSide]](32 partitions) = 8 the byte model already favors
-    * the grid while the wall clock favors the join — bytes are the cost
-    * model of a NETWORK-bound cluster exchange, not of a local spill.
-    * Deployments in that regime read this helper and set `gridScore`
-    * from it, the way [[graft.core.JoinPlanner.autoJoin]] turns
-    * joinStrategyChoice into a plan shape. */
-  def scoringShapeChoice(n: Long, dims: Int, k: Int, gridSideP: Int = 16): ScoringShape = {
-    require(n > 0, s"n must be > 0, got $n")
-    require(dims > 0 && k > 0 && gridSideP > 1,
-      s"bad knobs: dims=$dims k=$k gridSideP=$gridSideP")
-    val (p, r) = knnBanding(n)
-    val bands = (p / r).toLong
-    // ed doubles + nrm + vec_id + row overhead, the unsafe-row shape.
-    val vecBytes = 8L * dims + 28L
-    val occ = math.max(1.0, n.toDouble / (1L << r))
-    val seedCand = math.max(0L, (bands * n * (occ - 1.0) / 2.0).toLong)
-    val poolPairs = n * (2L * k * k + k)
-    val joinBytes = bands * n * vecBytes + 2L * k * n * vecBytes +
-      24L * (seedCand + poolPairs)
-    val gridBytes = 2L * gridSideP * n * vecBytes + 48L * bands * n +
-      20L * (seedCand + poolPairs)
-    ScoringShape(if (gridBytes < joinBytes) "grid" else "join",
-      joinBytes, gridBytes, seedCand, poolPairs)
-  }
-
-  /** [[scoringShapeChoice]] off a STORED stats frame (one
-    * [[graft.sources.TableStats.analyze]] row for the embedding table's
-    * id column carries `n_rows`) — the stats-as-data entry point: the
-    * decision costs one ≤ k-row frame read, never a corpus scan. */
-  def scoringShapeChoice(stats: DataFrame, column: String, dims: Int,
-                         k: Int): ScoringShape = {
-    val rows = stats.filter(col("column") === column)
-      .select("n_rows").collect()
-    require(rows.length == 1,
-      s"scoringShapeChoice: expected exactly 1 stats row for column '$column', found ${rows.length}")
-    scoringShapeChoice(rows(0).getLong(0), dims, k)
   }
 
   /** Grid-blocked exact-cosine pair verify — the 100 TB shape of the
@@ -2134,7 +1628,6 @@ object Similarity {
   def rpTopK(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10,
              rpDims: Int = 16, overfetch: Int = 3): DataFrame = {
     require(rpDims > 0 && overfetch >= 1)
-    val w = org.apache.spark.sql.expressions.Window
     val n = graft.core.CacheScope.persisted(
       withNorm(embeddings)
         .withColumn("rp", expr(s"rp_project(ed, $rpDims)"))
@@ -2142,18 +1635,10 @@ object Similarity {
     val queries = n.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("ed").as("q"), col("nrm").as("qn"),
         col("rp").as("qrp"), col("rpn").as("qrpn"))
-    n.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("rcos", expr(sparkCosPre("rp", "qrp", "rpn", "qrpn")))
-      .withColumn("crank", row_number().over(
-        w.partitionBy("query_id").orderBy(col("rcos").desc, col("vec_id"))))
-      .filter(col("crank") <= k * overfetch)
-      .withColumn("cos", expr(sparkCosPre("ed", "q", "nrm", "qn")))
-      .withColumn("rank", row_number().over(
-        w.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("bigint").as("rank"),
-        col("vec_id").as("nn_id"))
+    rerank(topK(neighborsOf(n, "rp", "rpn").crossJoin(broadcast(queries))
+        .filter(col("nn_id") =!= col("query_id"))
+        .withColumn("rcos", expr(sparkCosPre("rp", "qrp", "rpn", "qrpn"))),
+      "query_id", "rcos", "nn_id", k * overfetch, as = "crank"), k)
   }
 
   /** Sub-vector slice SQL (identical text shape for Spark; DuckDB twin in
@@ -2260,9 +1745,7 @@ object Similarity {
     * the corpus frame `n` (full vectors, re-rank only). */
   private def pqServe(codes: DataFrame, cb0: DataFrame, cb1: DataFrame,
                       n: DataFrame, nQueries: Int, k: Int, overfetch: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    val queries = n.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("ed").as("q"), col("nrm").as("qn"))
+    val queries = queriesOf(n, nQueries)
     // ADC tables: nQueries × kSub rows per subspace — query-to-codebook
     // dots precomputed once, broadcast to the code scan.
     val adc0 = queries.select(col("query_id"), col("qn"), expr(sliceLo("q")).as("qs"))
@@ -2273,26 +1756,18 @@ object Similarity {
       .crossJoin(cb1)
       .select(col("query_id"), col("cell").as("c1"),
         expr("array_dot(qs, ced)").as("ip1"), col("cnrm").as("cn1"))
-    val cand = codes
-      .join(broadcast(adc0), Seq("c0"))
-      .join(broadcast(adc1), Seq("query_id", "c1"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("acos", expr("(ip0 + ip1) / (qn * sqrt(cn0 * cn0 + cn1 * cn1))"))
-      .withColumn("crank", row_number().over(
-        w.partitionBy("query_id").orderBy(col("acos").desc, col("vec_id"))))
-      .filter(col("crank") <= k * overfetch)
-      .select("query_id", "vec_id")
+    val cand = topK(codes
+        .join(broadcast(adc0), Seq("c0"))
+        .join(broadcast(adc1), Seq("query_id", "c1"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("acos", expr("(ip0 + ip1) / (qn * sqrt(cn0 * cn0 + cn1 * cn1))")),
+      "query_id", "acos", "vec_id", k * overfetch, as = "crank")
+      .select(col("query_id"), col("vec_id").as("nn_id"))
     // Exact re-rank: the tiny winner set probes the corpus once for full
     // vectors (broadcast-hash, no corpus shuffle).
-    n.select(col("vec_id"), col("ed"), col("nrm"))
-      .join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cos", expr(sparkCosPre("ed", "q", "nrm", "qn")))
-      .withColumn("rank", row_number().over(
-        w.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("bigint").as("rank"),
-        col("vec_id").as("nn_id"))
+    rerank(neighborsOf(n)
+      .join(broadcast(cand), Seq("nn_id"))
+      .join(broadcast(queries), Seq("query_id")), k)
   }
 
   /** Build and STORE a PQ index: the two sub-codebooks (≤ kSub rows each)
@@ -2383,16 +1858,13 @@ object Similarity {
       .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank"))
     val sem = bruteForceTopK(embeddings, nQueries = queries.size, k = k)
       .select(col("query_id"), col("nn_id").as("doc_id"), col("rank").as("sem_rank"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("__rrf").desc, col("doc_id"))
-    lex.join(sem, Seq("query_id", "doc_id"), "full_outer")
-      .na.fill(0L, Seq("lex_rank", "sem_rank"))
-      .withColumn("__rrf",
-        when(col("lex_rank") > 0, lit(1.0) / (lit(kRrf) + col("lex_rank"))).otherwise(lit(0.0)) +
-        when(col("sem_rank") > 0, lit(1.0) / (lit(kRrf) + col("sem_rank"))).otherwise(lit(0.0)))
-      .withColumn("rank", row_number().over(w).cast("bigint"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("rank"),
+    topK(lex.join(sem, Seq("query_id", "doc_id"), "full_outer")
+        .na.fill(0L, Seq("lex_rank", "sem_rank"))
+        .withColumn("__rrf",
+          when(col("lex_rank") > 0, lit(1.0) / (lit(kRrf) + col("lex_rank"))).otherwise(lit(0.0)) +
+          when(col("sem_rank") > 0, lit(1.0) / (lit(kRrf) + col("sem_rank"))).otherwise(lit(0.0))),
+      "query_id", "__rrf", "doc_id", k)
+      .select(col("query_id"), col("doc_id"), col("rank").cast("bigint").as("rank"),
         round(col("__rrf"), 6).as("rrf"), col("lex_rank"), col("sem_rank"))
   }
 
@@ -2421,17 +1893,8 @@ object Similarity {
   def mmrTopK(embeddings: DataFrame, nQueries: Int = 8, k: Int = 8,
               overfetch: Int = 4, lambdaPpm: Long = 700000L): DataFrame = {
     require(k > 0 && overfetch >= 1 && lambdaPpm >= 0 && lambdaPpm <= 1000000L)
-    val n = withNorm(embeddings)
-    val queries = n.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("ed").as("q"), col("nrm").as("qn"))
-    val pool = broadcast(queries)
-      .join(n.select(col("vec_id").as("nn_id"), col("ed").as("e"), col("nrm").as("en")),
-        col("query_id") =!= col("nn_id"))
-      .withColumn("cos", expr(sparkCosPre("q", "e", "qn", "en")))
-      .withColumn("rel_rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id").orderBy(col("cos").desc, col("nn_id").asc)))
-      .filter(col("rel_rank") <= k * overfetch)
+    val pool = topK(scored(allPairs(withNorm(embeddings), nQueries)),
+      "query_id", "cos", "nn_id", k * overfetch, as = "rel_rank")
     val lam = s"CAST($lambdaPpm AS DOUBLE) / 1000000.0D"
     // Greedy selection as one fold: sel accumulates 1-based pool indices;
     // each step takes the argmax of the MMR score over unselected indices

@@ -78,9 +78,10 @@ class GraphMetricsSpec extends AnyFunSuite {
   }
 
   test("approx at p = 1/16: whole-graph estimate holds while per-node estimates go sparse") {
-    // The variance story behind the dense-regime knob (TriBench `sweep`
-    // measures it at 64k nodes: whole-graph error −0.45% → −1.05% from
-    // p = 1/2 to 1/16 while per-node zero-rate climbs 0% → 89.6%): the
+    // The variance story behind the dense-regime knob (measured at 64k
+    // nodes: whole-graph error −0.45% → −1.05% from p = 1/2 to 1/16 while
+    // per-node zero-rate climbs 0% → 89.6%; SCALING.md's "DOULION
+    // p-sweep" has the 1 M-node run): the
     // AGGREGATE stays usable at deep sparsification because survivors
     // scale with triangles-per-edge, but per-NODE estimates become
     // lottery tickets — a curator thresholding nodes must stay at mild p,
